@@ -27,11 +27,8 @@ object Tables {
     * production scale this is also the §6 file-listing-cache posture:
     * re-listing a large table's files on every query is driver poison.
     */
-  private val readerCache =
-    Memo.map[(SparkSession, String), DataFrame](_ => ())
-
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    readerCache.getOrElseUpdate((spark, s"$dir/$name.parquet"),
+    Memo.value[DataFrame](("Tables.load", spark, dir, name), _ => ())(
       spark.read.parquet(s"$dir/$name.parquet"))
 
   def region(s: SparkSession, d: String): DataFrame   = load(s, d, "region")

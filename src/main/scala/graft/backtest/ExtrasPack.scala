@@ -1,6 +1,6 @@
 package graft.backtest
 
-import graft.{QueryPack, Tables}
+import graft.{Memo, QueryPack, Tables}
 import graft.functions.Port
 import graft.operators.Bars
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -23,12 +23,9 @@ object ExtrasPack extends QueryPack {
     * over 1-min bars) — q_signal_ensemble and q_strategy_comparison both
     * consume it; one window pass per session instead of one per query.
     */
-  private val allThreeCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   private def allThreeCached(s: SparkSession, d: String): DataFrame =
-    allThreeCache.getOrElseUpdate((s, d),
-      graft.Memo.pin(Signals.allThreePlain(bars1m(s, d))))
+    Memo.frame(("ExtrasPack.allThree", s, d), Memo.Pin)(
+      Signals.allThreePlain(bars1m(s, d)))
 
   /** Strategy suffixes of the wide three-strategy frame. */
   private val StratSfx =
@@ -42,11 +39,8 @@ object ExtrasPack extends QueryPack {
     * over bar-scale cached rows; the frame is the natural read surface
     * for any cross-strategy analysis (turnover, attribution).
     */
-  private val wideThreeCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   private def wideThreeCached(s: SparkSession, d: String): DataFrame =
-    wideThreeCache.getOrElseUpdate((s, d), {
+    Memo.frame(("ExtrasPack.wideThree", s, d), Memo.Pin) {
       val w = Window.partitionBy("symbol").orderBy("bucket_ms")
       val cum = w.rowsBetween(Window.unboundedPreceding, 0)
       val lagLayer = allThreeCached(s, d).select(
@@ -75,11 +69,10 @@ object ExtrasPack extends QueryPack {
         col("*") +: StratSfx.map { case (x, _) =>
           (exp(col(s"log_equity_$x") - col(s"peak_$x")) - 1).as(s"dd_$x")
         }: _*)
-        // repartition + localCheckpoint (the Micro.cumTicksCached
-        // pattern): shallow consumer plans, no frozen 1-partition layout
+        // explicit repartition before the pin (the Micro.cumTicksCached
+        // pattern): AQE's small-SF coalesce is not frozen into the memo
         .repartition(32, col("symbol"))
-        .localCheckpoint()
-    })
+    }
 
   /** EMA via a bounded 60-tap weighted sum of window lags — one sort per
     * symbol, no join (a rank-range self-join explodes to |bars|² per

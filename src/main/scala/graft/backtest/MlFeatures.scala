@@ -1,5 +1,6 @@
 package graft.backtest
 
+import graft.Memo
 import graft.functions.Port
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -21,12 +22,9 @@ object MlFeatures {
     * q_ml_features and q_feature_importance (the seven sliding frames
     * are the expensive part; build once per session).
     */
-  private val cache =
-    graft.Memo.map[(org.apache.spark.sql.SparkSession, String), DataFrame](graft.Memo.release)
-
   def cached(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
-    cache.getOrElseUpdate((s, d),
-      graft.Memo.pin(compute(graft.operators.Bars.ohlcvCached(s, d, 60))))
+    Memo.frame(("MlFeatures.cached", s, d), Memo.Pin)(
+      compute(graft.operators.Bars.ohlcvCached(s, d, 60)))
 
   def compute(bars: DataFrame): DataFrame = {
     val w = Window.partitionBy("symbol").orderBy("bucket_ms")

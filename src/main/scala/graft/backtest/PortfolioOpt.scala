@@ -14,39 +14,19 @@ import org.apache.spark.sql.functions._
   * that scales to dense grids on a cluster, replacing a driver-side
   * optimizer. Risk-parity contributions (RiskParityOptimizer:245) are the
   * same relational product with fixed weights.
+  *
+  * Every operator takes the bar returns `rets` (Risk.barReturns of the
+  * bars) or their [[covMatrix]]: the caller decides what to share, and
+  * PortfolioPack memoizes them per session.
   */
 object PortfolioOpt {
   val RiskFree = 0.02
-
-  /** Session-memoized shared subplans, keyed by the bars DataFrame
-    * INSTANCE — sound because Bars.ohlcvCached returns one instance per
-    * (session, dataset, granularity), the same pattern as the memoized
-    * bars/shingles. Six queries (asset stats, frontier, max-sharpe,
-    * min-vol, risk parity ×2) otherwise each rebuild the returns scan,
-    * the N² covariance join, and — for the three frontier consumers —
-    * the whole grid-scoring pipeline.
-    */
-  private val retsCache =
-    graft.Memo.map[DataFrame, DataFrame](graft.Memo.release)
-  private def retsCached(bars: DataFrame): DataFrame =
-    retsCache.getOrElseUpdate(bars, Risk.barReturns(bars).cache())
-
-  private val covCache =
-    graft.Memo.map[DataFrame, DataFrame](graft.Memo.release)
-  private def covCached(bars: DataFrame): DataFrame =
-    covCache.getOrElseUpdate(bars, covFromRets(retsCached(bars)).cache())
-
-  private val frontierCache =
-    graft.Memo.map[(SparkSession, DataFrame, Int), (DataFrame, DataFrame)] { case (a, b) => graft.Memo.release(a); graft.Memo.release(b) }
 
   /** Pairwise annualized covariance/correlation matrix of per-symbol bar
     * returns, joined on time bucket (full N×N, both directions).
     * portfolio_optimization.py:22 (returns_df.cov() * 252).
     */
-  def covMatrix(bars: DataFrame): DataFrame =
-    covCached(bars)
-
-  private def covFromRets(rets: DataFrame): DataFrame = {
+  def covMatrix(rets: DataFrame): DataFrame = {
     val a = rets.select(col("symbol").as("symbol1"), col("bucket_ms"), col("r").as("r1"))
     val b = rets.select(col("symbol").as("symbol2"), col("bucket_ms"), col("r").as("r2"))
     a.join(b, "bucket_ms")
@@ -58,10 +38,7 @@ object PortfolioOpt {
   }
 
   /** Mean annualized return per symbol. */
-  def meanReturns(bars: DataFrame): DataFrame =
-    muFromRets(Risk.barReturns(bars))
-
-  private def muFromRets(rets: DataFrame): DataFrame =
+  def meanReturns(rets: DataFrame): DataFrame =
     rets.groupBy("symbol").agg((avg(col("r")) * 252).as("mu_ann_raw"))
 
   /** All weight compositions of `quarters` steps over the symbol set,
@@ -84,33 +61,51 @@ object PortfolioOpt {
     rows.toDF("grid_id", "symbol", "weight")
   }
 
-  /** Efficient frontier by grid search: portfolio return/vol/Sharpe per
-    * weight composition (portfolio_optimization.py:182).
-    */
   /** Weight grids are driver-built (they must be: compositions are a
     * combinatorial object, not data), so the symbol universe collect is
     * bounded — a mis-keyed input fails fast instead of OOMing the driver.
     */
   def MaxSymbols: Int = graft.GraftConfig.active.optMaxSymbols
 
-  private def symbolUniverse(mu: DataFrame): Seq[String] = {
-    val syms = mu.select("symbol").limit(MaxSymbols + 1).collect().map(_.getString(0))
+  /** The sorted symbol set of the returns, for [[weightGrid]]. */
+  def symbolUniverse(rets: DataFrame): Seq[String] = {
+    val syms = meanReturns(rets).select("symbol").limit(MaxSymbols + 1)
+      .collect().map(_.getString(0))
     require(syms.length <= MaxSymbols,
       s"weight-grid optimizer supports <= $MaxSymbols symbols, got more")
     syms.sorted.toSeq
   }
 
-  def frontier(spark: SparkSession, bars: DataFrame, quarters: Int = 4): DataFrame =
-    frontierWithGrid(spark, bars, quarters)._2
+  /** Efficient frontier by grid search: portfolio return/vol/Sharpe per
+    * weight composition of `grid` (portfolio_optimization.py:182).
+    */
+  def frontier(rets: DataFrame, cov: DataFrame, grid: DataFrame): DataFrame = {
+    val ret = grid.join(meanReturns(rets), "symbol")
+      .groupBy("grid_id")
+      .agg(sum(col("weight") * col("mu_ann_raw")).as("port_ret_raw"))
 
-  /** Argmax/argmin composition over the frontier grid — the number the
-    * reference's users consume (portfolio_optimization.py:87
+    val g1 = grid.select(col("grid_id"), col("symbol").as("symbol1"), col("weight").as("w1"))
+    val g2 = grid.select(col("grid_id"), col("symbol").as("symbol2"), col("weight").as("w2"))
+    val vol = g1.join(g2, "grid_id")
+      .join(broadcast(cov), Seq("symbol1", "symbol2"))
+      .groupBy("grid_id")
+      .agg(sqrt(sum(col("w1") * col("w2") * col("cov_ann_raw"))).as("port_vol_raw"))
+
+    ret.join(vol, "grid_id")
+      .select(
+        col("grid_id"),
+        Port.r(col("port_ret_raw"), 6).as("port_return"),
+        Port.r(col("port_vol_raw"), 6).as("port_vol"),
+        Port.r(when(col("port_vol_raw") > 0,
+          (col("port_ret_raw") - RiskFree) / col("port_vol_raw")).otherwise(0.0), 6).as("sharpe"))
+  }
+
+  /** Argmax/argmin composition over the [[frontier]] `f` of `grid` — the
+    * number the reference's users consume (portfolio_optimization.py:87
     * optimize_max_sharpe, :136 optimize_min_volatility). Returns the
     * winning weight vector in long form with its metrics.
     */
-  def selectPortfolio(spark: SparkSession, bars: DataFrame, objective: String,
-                      quarters: Int = 4): DataFrame = {
-    val (grid, f) = frontierWithGrid(spark, bars, quarters)
+  def selectPortfolio(grid: DataFrame, f: DataFrame, objective: String): DataFrame = {
     val best = (objective match {
       case "max_sharpe" => f.orderBy(col("sharpe").desc, col("grid_id"))
       case "min_vol"    => f.orderBy(col("port_vol"), col("grid_id"))
@@ -122,87 +117,35 @@ object PortfolioOpt {
       .orderBy("symbol")
   }
 
-  private def frontierWithGrid(spark: SparkSession, bars: DataFrame,
-                               quarters: Int): (DataFrame, DataFrame) =
-    frontierCache.getOrElseUpdate((spark, bars, quarters),
-      buildFrontier(spark, bars, quarters))
-
-  private def buildFrontier(spark: SparkSession, bars: DataFrame,
-                            quarters: Int): (DataFrame, DataFrame) = {
-    // cache barrier: the bar-returns scan feeds cov, mu AND the symbol
-    // collect — one tick->bars pass instead of three
-    val rets = retsCached(bars)
-    val cov = covCached(bars)
-    val mu = muFromRets(rets)
-    val symbols = symbolUniverse(mu)
-    val grid = weightGrid(spark, symbols, quarters)
-
-    val ret = grid.join(mu, "symbol")
-      .groupBy("grid_id")
-      .agg(sum(col("weight") * col("mu_ann_raw")).as("port_ret_raw"))
-
-    val g1 = grid.select(col("grid_id"), col("symbol").as("symbol1"), col("weight").as("w1"))
+  /** Risk contributions rc_i = w_i·(Σ_j cov_ij·w_j)/σ_p of every weight
+    * composition of `grid` (the input of [[riskParityOptimize]]).
+    */
+  def riskContribGrid(cov: DataFrame, grid: DataFrame): DataFrame = {
     val g2 = grid.select(col("grid_id"), col("symbol").as("symbol2"), col("weight").as("w2"))
-    val vol = g1.join(g2, "grid_id")
-      .join(broadcast(cov), Seq("symbol1", "symbol2"))
-      .groupBy("grid_id")
-      .agg(sqrt(sum(col("w1") * col("w2") * col("cov_ann_raw"))).as("port_vol_raw"))
-
-    val f = ret.join(vol, "grid_id")
-      .select(
-        col("grid_id"),
-        Port.r(col("port_ret_raw"), 6).as("port_return"),
-        Port.r(col("port_vol_raw"), 6).as("port_vol"),
-        Port.r(when(col("port_vol_raw") > 0,
-          (col("port_ret_raw") - RiskFree) / col("port_vol_raw")).otherwise(0.0), 6).as("sharpe"))
-    // the scored frontier is tiny (one row per composition); cache it so
-    // max-sharpe / min-vol / frontier share one scoring pass
-    (grid, f.cache())
+    val marginal = g2.join(broadcast(cov), "symbol2")
+      .groupBy(col("grid_id"), col("symbol1"))
+      .agg(sum(col("w2") * col("cov_ann_raw")).as("marg"))
+    val withW = marginal.join(
+      grid.select(col("grid_id"), col("symbol").as("symbol1"), col("weight")),
+      Seq("grid_id", "symbol1"))
+    // σ_p as a whole-grid-row window sum, not groupBy + join-back: the
+    // join form planned withW's three-shuffle lineage twice
+    withW
+      .withColumn("pv", sqrt(sum(col("weight") * col("marg"))
+        .over(Window.partitionBy("grid_id"))))
+      .withColumn("rc", col("weight") * col("marg") / col("pv"))
   }
 
   /** Risk-parity weight search (portfolio_optimization.py:282
     * RiskParityOptimizer.optimize): the SLSQP loop re-expressed as the
-    * same distributed grid search as the frontier — for every weight
-    * composition, risk contributions rc_i = w_i·(Σ_j cov_ij·w_j)/σ_p and
-    * the reference's objective Σ(rc_i − 1/n)², argmin by snapped
-    * objective (ties → lowest grid_id). Returns the winning composition
-    * in long form with its contributions.
+    * same distributed grid search as the frontier — over the
+    * [[riskContribGrid]] `rc` of `nSymbols` assets, the reference's
+    * objective Σ(rc_i − 1/n)², argmin by snapped objective (ties → lowest
+    * grid_id). Returns the winning composition in long form with its
+    * contributions.
     */
-  /** Session-memoized risk-contribution grid (feeds both the argmin and
-    * the final join below; memoized rather than bare-per-call-cached so
-    * Memo.invalidateAll owns eviction).
-    */
-  private val rcCache =
-    graft.Memo.map[(DataFrame, Int), DataFrame](graft.Memo.release)
-
-  private def rcGridCached(spark: SparkSession, bars: DataFrame,
-                           quarters: Int): DataFrame =
-    rcCache.getOrElseUpdate((bars, quarters), {
-      val rets = retsCached(bars)
-      val cov = covCached(bars)
-      val symbols = symbolUniverse(muFromRets(rets))
-      val grid = weightGrid(spark, symbols, quarters)
-      val g2 = grid.select(col("grid_id"), col("symbol").as("symbol2"), col("weight").as("w2"))
-      val marginal = g2.join(broadcast(cov), "symbol2")
-        .groupBy(col("grid_id"), col("symbol1"))
-        .agg(sum(col("w2") * col("cov_ann_raw")).as("marg"))
-      val withW = marginal.join(
-        grid.select(col("grid_id"), col("symbol").as("symbol1"), col("weight")),
-        Seq("grid_id", "symbol1"))
-      // σ_p as a whole-grid-row window sum, not groupBy + join-back: the
-      // join form planned withW's three-shuffle lineage twice
-      withW
-        .withColumn("pv", sqrt(sum(col("weight") * col("marg"))
-          .over(Window.partitionBy("grid_id"))))
-        .withColumn("rc", col("weight") * col("marg") / col("pv"))
-        .cache()
-    })
-
-  def riskParityOptimize(spark: SparkSession, bars: DataFrame,
-                         quarters: Int = 4): DataFrame = {
-    val symbols = symbolUniverse(muFromRets(retsCached(bars)))
-    val rc = rcGridCached(spark, bars, quarters)
-    val target = 1.0 / symbols.length
+  def riskParityOptimize(rc: DataFrame, nSymbols: Int): DataFrame = {
+    val target = 1.0 / nSymbols
     val best = rc.groupBy("grid_id")
       .agg(Port.r(sum((col("rc") - target) * (col("rc") - target)), 2).as("objective"))
       .orderBy(col("objective"), col("grid_id")).limit(1)
@@ -215,8 +158,7 @@ object PortfolioOpt {
   /** Risk contribution per asset at fixed equal weights
     * (portfolio_optimization.py:245 calculate_risk_contributions).
     */
-  def riskContributions(bars: DataFrame, weight: Double = 0.2): DataFrame = {
-    val cov = covMatrix(bars)
+  def riskContributions(cov: DataFrame, weight: Double = 0.2): DataFrame = {
     val marginal = cov.groupBy("symbol1")
       .agg(sum(col("cov_ann_raw") * weight).as("marginal_raw"))
     val portVol = marginal

@@ -1,6 +1,6 @@
 package graft.backtest
 
-import graft.{QueryPack, Tables}
+import graft.{Memo, QueryPack, Tables}
 import graft.functions.Port
 import graft.operators.Bars
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -14,24 +14,53 @@ object PortfolioPack extends QueryPack {
   private def barsH(s: SparkSession, d: String): DataFrame =
     Bars.ohlcvCached(s, d, 3600)
 
+  /** Session memos shared by the six queries: the returns scan, the N²
+    * covariance join, the symbol universe and — for the frontier and
+    * risk-parity consumers — the grid-scoring frames. Without them each
+    * query rebuilds the whole chain.
+    */
+  private def rets(s: SparkSession, d: String): DataFrame =
+    Memo.frame(("PortfolioPack.rets", s, d), Memo.Cache)(Risk.barReturns(barsH(s, d)))
+
+  private def cov(s: SparkSession, d: String): DataFrame =
+    Memo.frame(("PortfolioPack.cov", s, d), Memo.Cache)(PortfolioOpt.covMatrix(rets(s, d)))
+
+  private def symbols(s: SparkSession, d: String): Seq[String] =
+    Memo.value[Seq[String]](("PortfolioPack.symbols", s, d), _ => ())(
+      PortfolioOpt.symbolUniverse(rets(s, d)))
+
+  private def grid(s: SparkSession, d: String): DataFrame =
+    PortfolioOpt.weightGrid(s, symbols(s, d))
+
+  // the scored frontier is tiny (one row per composition): max-sharpe,
+  // min-vol and the frontier share one scoring pass
+  private def frontier(s: SparkSession, d: String): DataFrame =
+    Memo.frame(("PortfolioPack.frontier", s, d), Memo.Cache)(
+      PortfolioOpt.frontier(rets(s, d), cov(s, d), grid(s, d)))
+
+  // feeds both the argmin and the final join of q_risk_parity_opt
+  private def rcGrid(s: SparkSession, d: String): DataFrame =
+    Memo.frame(("PortfolioPack.rcGrid", s, d), Memo.Cache)(
+      PortfolioOpt.riskContribGrid(cov(s, d), grid(s, d)))
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_asset_stats" -> ((s, d) =>
-      PortfolioOpt.covMatrix(barsH(s, d))
+      cov(s, d)
         .select(col("symbol1"), col("symbol2"),
           Port.r(col("cov_ann_raw"), 4).as("cov_ann"),
           Port.r(col("corr_raw"), 6).as("corr"),
           col("n"))
         .orderBy("symbol1", "symbol2")),
     "q_efficient_frontier" -> ((s, d) =>
-      PortfolioOpt.frontier(s, barsH(s, d)).orderBy("grid_id")),
+      frontier(s, d).orderBy("grid_id")),
     "q_max_sharpe" -> ((s, d) =>
-      PortfolioOpt.selectPortfolio(s, barsH(s, d), "max_sharpe")),
+      PortfolioOpt.selectPortfolio(grid(s, d), frontier(s, d), "max_sharpe")),
     "q_min_vol" -> ((s, d) =>
-      PortfolioOpt.selectPortfolio(s, barsH(s, d), "min_vol")),
+      PortfolioOpt.selectPortfolio(grid(s, d), frontier(s, d), "min_vol")),
     "q_risk_parity" -> ((s, d) =>
-      PortfolioOpt.riskContributions(barsH(s, d)).orderBy("symbol")),
+      PortfolioOpt.riskContributions(cov(s, d)).orderBy("symbol")),
     "q_risk_parity_opt" -> ((s, d) =>
-      PortfolioOpt.riskParityOptimize(s, barsH(s, d)))
+      PortfolioOpt.riskParityOptimize(rcGrid(s, d), symbols(s, d).length))
   )
 
   private val RetsHCte: String =

@@ -1,6 +1,6 @@
 package graft.backtest
 
-import graft.{QueryPack, Tables}
+import graft.{Memo, QueryPack, Tables}
 import graft.functions.Port
 import graft.operators.Bars
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -23,28 +23,22 @@ object RiskPack extends QueryPack {
     * Tiny (one row per symbol); expression-identical to Risk.varCvar /
     * Risk.volSizing so the oracles are unchanged.
     */
-  private val riskStatsCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   private def riskStats(s: SparkSession, d: String): DataFrame =
-    riskStatsCache.getOrElseUpdate((s, d),
+    Memo.frame(("RiskPack.riskStats", s, d), Memo.Cache)(
       // built from Risk's own expression lists (varCvarAggs +
       // annStatsAggs via varCvarOn's extraAggs) — one definition per
       // formula, so this fused frame cannot desync from the oracled
       // Risk.varCvar / Risk.volSizing forms
       Risk.varCvarOn(Risk.barReturns(bars1m(s, d)),
         percentile(col("r"), lit(0.05)), percentile(col("r"), lit(0.01)),
-        Risk.annStatsAggs).cache())
+        Risk.annStatsAggs))
 
   /** Session-memoized per-(symbol, day) net/drawdown aggregate — fans out
     * into the two alert families of q_risk_alert_log (a bare per-call
     * .cache() here would sit outside Memo eviction).
     */
-  private val dailyRiskCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   private def dailyRiskCached(s: SparkSession, d: String): DataFrame =
-    dailyRiskCache.getOrElseUpdate((s, d), {
+    Memo.frame(("RiskPack.dailyRisk", s, d), Memo.Cache) {
       val cum = Window.partitionBy("symbol").orderBy("bucket_ms")
         .rowsBetween(Window.unboundedPreceding, 0)
       btMaCross(s, d)
@@ -52,8 +46,7 @@ object RiskPack extends QueryPack {
         .withColumn("day_ms", expr("bucket_ms div 86400000") * 86400000L)
         .groupBy("symbol", "day_ms")
         .agg(sum(col("net_returns")).as("day_net"), min(col("dd")).as("day_min_dd"))
-        .cache()
-    })
+    }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_var_cvar" -> ((s, d) =>

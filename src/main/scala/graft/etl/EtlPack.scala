@@ -1,6 +1,6 @@
 package graft.etl
 
-import graft.{QueryPack, Tables}
+import graft.{Memo, QueryPack, Tables}
 import graft.functions.Port
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -15,13 +15,17 @@ object EtlPack extends QueryPack {
   /** Session-memoized dedup stage for the clean-pipeline funnel (fans out
     * into four downstream counts/aggregates within the query).
     */
-  private val dedupStageCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   private def dedupStageCached(s: SparkSession, d: String): DataFrame =
-    dedupStageCache.getOrElseUpdate((s, d),
+    Memo.frame(("EtlPack.dedupStage", s, d), Memo.Cache)(
       Cleaner.dedupKeepFirst(Tables.ticks(s, d))
-        .select(col("symbol"), col("first_price").as("price")).cache())
+        .select(col("symbol"), col("first_price").as("price")))
+
+  /** Session-memoized gap-run frame of the 1-min bars: all three fill
+    * queries derive from the same exploded spine — one build per
+    * (session, dataset) instead of three.
+    */
+  private def gapRunsCached(s: SparkSession, d: String): DataFrame =
+    Memo.frame(("EtlPack.gapRuns", s, d), Memo.Cache)(Cleaner.gapRuns(Bars.ohlcvCached(s, d, 60)))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_normalize_trades" -> ((s, d) =>
@@ -49,13 +53,13 @@ object EtlPack extends QueryPack {
     "q_validate_prices" -> ((s, d) =>
       Cleaner.validatePrices(Tables.ticks(s, d), 10.0, 180.0).orderBy("symbol")),
     "q_fill_missing_minutes" -> ((s, d) =>
-      Cleaner.fillMissingMinutes(Bars.ohlcvCached(s, d, 60))
+      Cleaner.fillMissingMinutes(gapRunsCached(s, d))
         .orderBy("symbol", "bucket_ms")),
     "q_fill_missing_bfill" -> ((s, d) =>
-      Cleaner.fillMissingBfill(Bars.ohlcvCached(s, d, 60))
+      Cleaner.fillMissingBfill(gapRunsCached(s, d))
         .orderBy("symbol", "bucket_ms")),
     "q_fill_missing_interp" -> ((s, d) =>
-      Cleaner.fillMissingInterp(Bars.ohlcvCached(s, d, 60))
+      Cleaner.fillMissingInterp(gapRunsCached(s, d))
         .orderBy("symbol", "bucket_ms")),
     "q_clean_pipeline" -> ((s, d) => {
       // composed cleaning chain (cleaner.py:230 clean_pipeline_pandas,

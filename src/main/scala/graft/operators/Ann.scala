@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Memo
 import graft.functions.Port
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -72,7 +73,7 @@ object Ann {
     // which a bare LogicalRDD lacks (default sizeInBytes = huge), so the
     // emb⋈assigned joins keep auto-broadcasting the tiny side instead of
     // falling back to sort-merge (measured +0.7 s on q_ann_recall_audit
-    // with checkpoint alone). Memo.release unpersists both layers.
+    // with checkpoint alone). Memo's release unpersists both layers.
     val a2 = assign(emb, c1).localCheckpoint().cache()
     val c2 = centroids(emb, a2).localCheckpoint().cache()
     (a2, c2)
@@ -159,21 +160,12 @@ object Ann {
     // staged result with live scaffolding handed callers the exact async-
     // ContextCleaner nondeterminism the staged variant exists to fix.
     val (res, scaffolding) = hyperplaneNearDupStaged(emb, bands, bits, threshold, cap)
+    // the caller owns the returned cache (unpersist when done)
     val r = res.cache()
     r.count()
     scaffolding.foreach(_.unpersist(blocking = false))
-    // the result cache itself is Memo-tracked: repeated calls don't leak
-    // past invalidateAll, and a mutable-input session can't re-serve a
-    // stale pair table from the CacheManager (same contract as
-    // AnnPack.embCache)
-    liveResults.put(r, r)
     r
   }
-
-  /** Caches handed out by the self-cleaning entry point, keyed by the
-    * frame itself (no dedup — lifecycle tracking only).
-    */
-  private val liveResults = graft.Memo.map[DataFrame, DataFrame](graft.Memo.release)
 
   /** [[hyperplaneNearDup]] plus its cache scaffolding (the signature and
     * size-filtered bucket frames) so a caller that materializes the
@@ -271,13 +263,6 @@ object Ann {
     * per-call caches lingered for the async ContextCleaner — the same
     * nondeterministic-bench-neighborhood debt r07 removed from dedup).
     */
-  private val kmeansCache =
-    graft.Memo.map[(org.apache.spark.sql.SparkSession,
-                    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int),
-                   (DataFrame, DataFrame)] {
-      case (a, c) => graft.Memo.release(a); graft.Memo.release(c)
-    }
-
   /** Keyed on the canonicalized plan OBJECT (structural equality — the
     * definition `sameResult` uses), not its toString: plan rendering is
     * truncated by spark.sql.debug.maxToStringFields ("... N more
@@ -285,9 +270,12 @@ object Ann {
     * and silently serve clustering computed over the wrong corpus.
     */
   def kmeansCellsCached(emb: DataFrame, cells: Int): (DataFrame, DataFrame) =
-    kmeansCache.getOrElseUpdate(
-      (emb.sparkSession, emb.queryExecution.logical.canonicalized, cells),
-      kmeansCells(emb, cells))
+    Memo.value(("Ann.kmeansCells", emb.sparkSession,
+      emb.queryExecution.logical.canonicalized, cells), releasePair)(kmeansCells(emb, cells))
+
+  private def releasePair(p: (DataFrame, DataFrame)): Unit = {
+    Memo.release(p._1); Memo.release(p._2)
+  }
 
   /** Semantic cluster audit: per-cell membership count plus snapped
     * mean/min cosine-to-centroid over the sqrt(n)-style k-means cells —
@@ -451,19 +439,12 @@ object Ann {
     (a2, c2)
   }
 
-  private val pqCache =
-    graft.Memo.map[(org.apache.spark.sql.SparkSession,
-                    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int, Int, Int),
-                   (DataFrame, DataFrame)] {
-      case (a, c) => graft.Memo.release(a); graft.Memo.release(c)
-    }
-
   /** Session-memoized PQ training, keyed like kmeansCellsCached (the
     * canonicalized plan OBJECT, not its truncatable string form).
     */
   def pqCodebooksCached(emb: DataFrame, m: Int, dsub: Int, k: Int): (DataFrame, DataFrame) =
-    pqCache.getOrElseUpdate(
-      (emb.sparkSession, emb.queryExecution.logical.canonicalized, m, dsub, k),
+    Memo.value(("Ann.pqCodebooks", emb.sparkSession,
+      emb.queryExecution.logical.canonicalized, m, dsub, k), releasePair)(
       pqCodebooks(emb, m, dsub, k))
 
   /** ADC (asymmetric distance computation) top-k: queries stay exact,
@@ -518,27 +499,21 @@ object Ann {
     * projection uses a Scala-lambda zip_with, and every lambda build
     * mints fresh lambda-variable ids — so a per-call resid rebuild never
     * canonicalized-equals the previous one and pqCodebooksCached missed
-    * on EVERY call (measured with tools/CanonProbe: 'x_9 vs 'x_11 in the
-    * otherwise-identical plans). The .cache() era masked the miss via
-    * CacheManager sameResult dedup (analysis normalizes the lambdas);
-    * the r16 localCheckpoint materialization has no such net, so the
-    * miss became a full per-call PQ re-train. Memoizing the DataFrame
-    * OBJECT (no persistence — it's just a plan) makes the downstream
-    * memo key the same instance every call, which is the stability
-    * contract every other ANN memo already relies on.
+    * on EVERY call (measured: 'x_9 vs 'x_11 in the otherwise-identical
+    * plans). The .cache() era masked the miss via CacheManager
+    * sameResult dedup (analysis normalizes the lambdas); the r16
+    * localCheckpoint materialization has no such net, so the miss became
+    * a full per-call PQ re-train. Memoizing the residual plan (no
+    * persistence) keeps the PQ memo's key, its canonicalized plan,
+    * identical on every call.
     */
-  private val residCache =
-    graft.Memo.map[(org.apache.spark.sql.SparkSession,
-                    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int),
-                   DataFrame](_ => ())
-
   def ivfPqTopK(emb: DataFrame, nQueries: Int, k: Int, cells: Int = 8,
                 m: Int = 8, dsub: Int = 8, pqK: Int = 8, nprobe: Int = 2): DataFrame = {
     val (assigned, cent) = kmeansCellsCached(emb, cells)
     // residuals x - c_cell(x): what PQ encodes (far lower variance than
     // raw vectors once the coarse term is factored out)
-    val resid = residCache.getOrElseUpdate(
-      (emb.sparkSession, emb.queryExecution.logical.canonicalized, cells),
+    val resid = Memo.value[DataFrame](("Ann.resid", emb.sparkSession,
+      emb.queryExecution.logical.canonicalized, cells), _ => ())(
       emb.join(assigned, "vec_id").join(broadcast(cent), "cell")
         .select(col("vec_id"), zip_with(col("e"), col("ce"), (x, y) => x - y).as("e")))
     val (codes, books) = pqCodebooksCached(resid, m, dsub, pqK)
@@ -621,11 +596,20 @@ object Ann {
     * Returned CACHED and materialized; the caller owns the unpersist.
     */
   def knnGraphEdges(candScores: DataFrame, degree: Int): DataFrame = {
+    val edges = knnGraphEdgeFrame(candScores, degree).cache()
+    edges.count()
+    edges
+  }
+
+  /** [[knnGraphEdges]] as a plan, for callers that materialize it
+    * themselves (the session memo).
+    */
+  def knnGraphEdgeFrame(candScores: DataFrame, degree: Int): DataFrame = {
     val dirs = candScores
       .select(col("v1").as("src"), col("v2").as("dst"), col("cosine"))
       .unionByName(
         candScores.select(col("v2").as("src"), col("v1").as("dst"), col("cosine")))
-    val edges = dirs
+    dirs
       .withColumn("_split", spark_partition_id())
       .withColumn("_lrk", row_number().over(
         Window.partitionBy("src", "_split").orderBy(col("cosine").desc, col("dst"))))
@@ -634,9 +618,6 @@ object Ann {
         Window.partitionBy("src").orderBy(col("cosine").desc, col("dst"))))
       .filter(col("rk") <= degree)
       .select("src", "dst")
-      .cache()
-    edges.count()
-    edges
   }
 
   def graphBeamTopK(emb: DataFrame, candScores: DataFrame, nQueries: Int,

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryPack, Tables}
+import graft.{Memo, QueryPack, Tables}
 import graft.functions.Port
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -35,13 +35,13 @@ object AnnPack extends QueryPack {
       .select(col("vec_id"), col("label"), col("embedding").cast("array<double>").as("e")))
 
   /** Session-memoized CACHED embedding frame shared by the IVF and
-    * near-dup pipelines. Registered in a Memo map so invalidateAll
-    * unpersists it — a bare `.cache()` here would survive eviction in the
-    * CacheManager and re-serve stale embedding data to the rebuilt plan
-    * (the staleness hazard invalidateAll exists to close).
+    * near-dup pipelines. Memoized so invalidateAll unpersists it — a
+    * bare `.cache()` here would survive eviction in the CacheManager and
+    * re-serve stale embedding data to the rebuilt plan (the staleness
+    * hazard invalidateAll exists to close).
     */
-  private val embCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
+  private[operators] def embCached(s: SparkSession, d: String): DataFrame =
+    Memo.frame(("AnnPack.emb", s, d), Memo.Cache)(emb(s, d))
 
   /** Session-memoized degree-8 kNN edge list for the beam-search GRAPH
     * (r17): the index build (LSH pool + two-level degree rank) is the
@@ -49,28 +49,26 @@ object AnnPack extends QueryPack {
     * 3 hop expansions) runs per call, so q_ann_beam_topk's bench row
     * prices the walk, not a memo read (VERDICT r16 item 1: no registered
     * query may be a bare memo read; the r14-r16 beamCache memoized the
-    * query's own output).
+    * query's own output). Pinned so plan lineage truncates (r16 pin
+    * sweep).
     */
-  private val beamEdgeCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   private def beamEdgesCached(s: SparkSession, d: String): DataFrame =
-    beamEdgeCache.getOrElseUpdate((s, d), {
-      val e = Ann.knnGraphEdges(candScoresCached(s, d), degree = 8)
-      // knnGraphEdges returns a plain cached frame; re-pin it so plan
-      // lineage truncates (r16 pin sweep) and free the interim cache
-      val pinned = graft.Memo.pin(e)
-      pinned.count()
-      e.unpersist(blocking = false)
-      pinned
-    })
+    Memo.frame(("AnnPack.beamEdges", s, d), Memo.Pin)(
+      Ann.knnGraphEdgeFrame(candScoresCached(s, d), degree = 8))
 
-  /** Session-memoized PHash56 signature table for q_media_neardup (r16). */
-  private val phashCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
+  /** Session-memoized PHash56 signature table for q_media_neardup (r16),
+    * as (doc_id, simhash), and its capped band frame: the custom codegen
+    * expression decodes every document's byte grid — the costliest scan
+    * in that query — and the signature frame is one small row per doc,
+    * the natural cache unit (same contract as DedupPack's simhashCached).
+    */
+  private def phashCached(s: SparkSession, d: String): DataFrame =
+    Memo.frame(("AnnPack.phash", s, d), Memo.Pin)(
+      Multimodal.perceptualHash(Tables.documents(s, d))
+        .withColumnRenamed("phash", "simhash"))
 
-  private[operators] def embCached(s: SparkSession, d: String): DataFrame =
-    embCache.getOrElseUpdate((s, d), emb(s, d).cache())
+  private def phashBandsCached(s: SparkSession, d: String): DataFrame =
+    Memo.frame(("AnnPack.phashBands", s, d), Memo.Pin)(DedupPack.cappedBands(phashCached(s, d)))
 
   /** Session-memoized exact brute-force cosine top-10 for the 10 bench
     * queries (r16): used as shared GROUND-TRUTH infrastructure by
@@ -81,12 +79,9 @@ object AnnPack extends QueryPack {
     * the brute-force pass, so its bench row prices the scan it claims
     * to; the memo fill rides the first ground-truth consumer instead.
     */
-  private val bruteTopCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   private[operators] def bruteTopCached(s: SparkSession, d: String): DataFrame =
-    bruteTopCache.getOrElseUpdate((s, d),
-      graft.Memo.pin(Ann.bruteTopK(embCached(s, d), nQueries = 10, k = 10)))
+    Memo.frame(("AnnPack.bruteTop", s, d), Memo.Pin)(
+      Ann.bruteTopK(embCached(s, d), nQueries = 10, k = 10))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // per-run brute pass (r17): the full corpus dot-product top-10 runs
@@ -294,21 +289,16 @@ object AnnPack extends QueryPack {
       // band collision with its verified hamming + verdict) so the
       // operator's full posture is visible on corpora with no planted
       // near-identical media; the production gate is `WHERE is_dup`.
-      // PHash56 signature table memoized per session (r16): the custom
-      // codegen expression decodes every document's byte grid — the
-      // costliest scan in this query — and the signature frame is one
-      // small row per doc, the natural cache unit (same contract as
-      // DedupPack's simhashCached).
-      val ph = phashCache.getOrElseUpdate((s, d),
-        Multimodal.perceptualHash(Tables.documents(s, d))
-          .withColumnRenamed("phash", "simhash").transform(graft.Memo.pin))
-      DedupPack.simhashPairs(ph, emitBound = 56L)
+      DedupPack.simhashPairsOver(phashCached(s, d), phashBandsCached(s, d), emitBound = 56L)
         .select(col("doc1"), col("doc2"),
           col("simhash1").as("phash1"), col("simhash2").as("phash2"),
           col("hamming"), (col("hamming") <= 6).as("is_dup"))
         .orderBy("doc1", "doc2")
     })
   )
+
+  private def poolKey(s: SparkSession, d: String) = ("AnnPack.candScores", s, d)
+  private def dedupTierKey(s: SparkSession, d: String) = ("AnnPack.nearDup", s, d)
 
   /** Session-memoized embedding near-dup pairs via random-hyperplane LSH
     * blocking (bits/bands auto-sized from the corpus count —
@@ -321,8 +311,21 @@ object AnnPack extends QueryPack {
     * for the async ContextCleaner and their cleanup landed on whichever
     * bench queries ran next (the r06 dedup-neighborhood variance).
     */
-  private val nearDupCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
+  private def candScoreFrame(key: Product, s: SparkSession, d: String,
+                             threshold: Double): DataFrame =
+    // the interior frames are plain caches with live lineage: freed once
+    // the pool is materialized (an evicted pool recomputes them)
+    Memo.staged(key, Memo.Cache) {
+      val emb = embCached(s, d)
+      // EXACT count, not corpusSize's plan-stats shortcut: bits must
+      // equal the oracle's count(*)-derived value bit-for-bit (a stale
+      // stat that flips bits would bucket differently than the mirror);
+      // emb is the session-cached frame, so this count is one cheap
+      // cached-scan per session
+      val (bits, bands) = Ann.autoLshParams(emb.count())
+      Ann.hyperplaneNearDupStaged(emb, bands = bands, bits = bits,
+        threshold = threshold, cap = graft.GraftConfig.active.annLshCap)
+    }
 
   /** UNthresholded LSH candidate scores (v1 < v2, snapped cosine) — ONE
     * hyperplane pass per session shared by the near-dup filter and the
@@ -349,53 +352,29 @@ object AnnPack extends QueryPack {
     * hashes unchanged either way, and a mixed session that builds the
     * full pool serves dedup as a free filter of it.
     */
-  private def buildCandScores(s: SparkSession, d: String,
-                              threshold: Double): DataFrame = {
-    val emb = embCached(s, d)
-    // EXACT count, not corpusSize's plan-stats shortcut: bits must
-    // equal the oracle's count(*)-derived value bit-for-bit (a stale
-    // stat that flips bits would bucket differently than the mirror);
-    // emb is the session-cached frame, so this count is one cheap
-    // cached-scan per session
-    val (bits, bands) = Ann.autoLshParams(emb.count())
-    val (res, scaffolding) = Ann.hyperplaneNearDupStaged(emb,
-      bands = bands, bits = bits, threshold = threshold, cap = graft.GraftConfig.active.annLshCap)
-    val r = res.cache()
-    r.count()
-    // plain cached frames with live lineage: safe to free (a cache-
-    // evicted result would recompute them, unlike checkpoint leaves)
-    scaffolding.foreach(_.unpersist(blocking = false))
+  private[operators] def candScoresCached(s: SparkSession, d: String): DataFrame = {
+    val r = candScoreFrame(poolKey(s, d), s, d, threshold = -2.0)
+    // the thresholded tier is now a free filter of the pool — evict the
+    // redundant copy (later dedup calls take the pool path)
+    Memo.evict(dedupTierKey(s, d))
     r
   }
 
-  private[operators] def candScoresCached(s: SparkSession, d: String): DataFrame =
-    nearDupCache.getOrElseUpdate((s, d), {
-      val r = buildCandScores(s, d, threshold = -2.0)
-      // the thresholded tier is now a free filter of the pool — evict
-      // the redundant pinned copy (later dedup calls take the pool path)
-      nearDupThreshCache.remove((s, d)).foreach(_.unpersist(blocking = false))
-      r
-    })
-
   /** Thresholded tier for the dedup consumers. If the full pool is
-    * already (or will be) pinned by this session, dedup rides it as a
-    * filter; otherwise only the thresholded frame is materialized.
+    * already resident in this session, dedup rides it as a filter;
+    * otherwise only the thresholded frame is materialized.
     */
-  private val nearDupThreshCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   private def nearDupCached(s: SparkSession, d: String): DataFrame =
-    if (nearDupCache.contains((s, d)))
+    if (Memo.contains(poolKey(s, d)))
       candScoresCached(s, d).filter(col("cosine") >= 0.35)
     else
-      nearDupThreshCache.getOrElseUpdate((s, d),
-        buildCandScores(s, d, threshold = 0.35))
+      candScoreFrame(dedupTierKey(s, d), s, d, threshold = 0.35)
 
   /** (full pool resident, thresholded tier resident) — the two-tier
     * contract probe for DedupEvictionSpec; not part of the API.
     */
   private[graft] def nearDupTierState(s: SparkSession, d: String): (Boolean, Boolean) =
-    (nearDupCache.contains((s, d)), nearDupThreshCache.contains((s, d)))
+    (Memo.contains(poolKey(s, d)), Memo.contains(dedupTierKey(s, d)))
 
   /** The shared 2-round k-means mirror prefix (CTEs c..cn2),
     * parameterized on the cell-count expression — `"8"` for the pinned

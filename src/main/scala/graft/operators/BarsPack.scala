@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryPack, Tables}
+import graft.{Memo, QueryPack, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -16,11 +16,8 @@ object BarsPack extends QueryPack {
     * aggregate ran once per warm pass before r15 (the only tick-scan
     * left in its chain), now once per session.
     */
-  private val minuteDollarCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   private def minuteDollarCached(s: SparkSession, d: String): DataFrame =
-    minuteDollarCache.getOrElseUpdate((s, d), {
+    Memo.frame(("BarsPack.minuteDollar", s, d), Memo.Pin) {
       val dec = org.apache.spark.sql.types.DecimalType(38, 0)
       Micro.signedTicksCached(s, d)
         .groupBy(col("symbol"),
@@ -28,12 +25,10 @@ object BarsPack extends QueryPack {
           expr("ts div 60000000000 * 60000").as("bucket_ms"))
         .agg(sum(col("dollar_c").cast(dec)).as("dc"),
           sum(col("vol").cast(dec)).as("v"))
-        // repartition + localCheckpoint (the Micro.cumTicksCached
-        // pattern): shallow consumer plans, AQE's small-SF coalesce not
-        // frozen into a 1-partition layout
+        // explicit repartition before the pin (the Micro.cumTicksCached
+        // pattern): AQE's small-SF coalesce is not frozen into the memo
         .repartition(32, col("symbol"), col("day"))
-        .localCheckpoint()
-    })
+    }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_ohlcv_1min" -> ((s, d) =>

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryPack, Tables}
+import graft.{Memo, QueryPack, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -105,11 +105,11 @@ object DedupPack extends QueryPack {
     * a bare per-call .cache() here would linger for the async
     * ContextCleaner — the r07 bench-neighborhood debt class).
     */
-  private val simhashCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   private def simhashCached(s: SparkSession, d: String): DataFrame =
-    simhashCache.getOrElseUpdate((s, d), graft.Memo.pin(simhash(Tables.documents(s, d))))
+    Memo.frame(("DedupPack.simhash", s, d), Memo.Pin)(simhash(Tables.documents(s, d)))
+
+  private def simhashBandsCached(s: SparkSession, d: String): DataFrame =
+    Memo.frame(("DedupPack.simhashBands", s, d), Memo.Pin)(cappedBands(simhashCached(s, d)))
 
   /** Output-stage partner cap for the simhash band join: each doc emits
     * at most this many pairs per (band, key) bucket, partners taken in
@@ -136,6 +136,30 @@ object DedupPack extends QueryPack {
     */
   def PairsPerDocPerBucket: Long = graft.GraftConfig.active.lshPairsPerDocPerBucket
 
+  /** Capped signature-band frame of a (doc_id, simhash) table: the
+    * groupBy(simhash) → band explode → bucket-size window → BucketCap
+    * filter prefix is pure INPUT-derived index infrastructure (one small
+    * row per distinct signature × band). The packs memoize it per
+    * (session, dataset) next to the signature table it derives from
+    * (r17, VERDICT r16 item 6: q_dedup_simhash's text signatures,
+    * q_media_neardup's PHash56 signatures); the VERIFY/cap/distinct tail
+    * of [[simhashPairsOver]] — the query's own output — stays per-run.
+    */
+  def cappedBands(sh: DataFrame): DataFrame = {
+    val classes = sh.groupBy("simhash").agg(count(lit(1)).as("csz"))
+    val sigBands = classes.withColumn("band", explode(sequence(lit(0), lit(3))))
+      .withColumn("key", expr("(simhash >> (band * 14)) & 16383"))
+    // the BucketCap contract counts DOCS per (band, key) — sum of class
+    // sizes, no doc-level explode needed. Whole-partition window, not
+    // groupBy + join-back (r16): the same per-(band, key) sum lands on
+    // every row in ONE exchange instead of two (aggregate + re-join).
+    val wBK = org.apache.spark.sql.expressions.Window.partitionBy("band", "key")
+    sigBands
+      .withColumn("bsz", sum("csz").over(wBK))
+      .filter(col("bsz") <= BucketCap)
+      .select("simhash", "band", "key")
+  }
+
   /** Near-dup pairs over a (doc_id, simhash) frame: 4 bands x 14 bits
     * over the 56-bit signature (pigeonhole: any pair within hamming 3
     * shares a band; the <= 6 emit bound keeps the candidate-then-verify
@@ -146,38 +170,11 @@ object DedupPack extends QueryPack {
     * quadratic pair mass). The per-doc rank window partitions by
     * (band, key, doc1) — ≤ bucket-size rows per partition, bounded.
     */
-  /** Session-memoized capped signature-band frame per signature table
-    * (r17, VERDICT r16 item 6): the groupBy(simhash) → band explode →
-    * bucket-size window → BucketCap filter prefix is pure INPUT-derived
-    * index infrastructure (one small row per distinct signature × band),
-    * shared by every simhashPairs call over the same pinned signature
-    * frame (q_dedup_simhash's text signatures, q_media_neardup's PHash56
-    * signatures — both stable session-memoized instances, so keying on
-    * the frame reference is the same contract as every (session, dataset)
-    * memo). The VERIFY/cap/distinct tail — the query's own output — stays
-    * per-run.
-    */
-  private val bandFrameCache =
-    graft.Memo.map[(org.apache.spark.sql.SparkSession, DataFrame), DataFrame](
-      graft.Memo.release)
+  def simhashPairs(sh: DataFrame, emitBound: Long = 6L): DataFrame =
+    simhashPairsOver(sh, cappedBands(sh), emitBound)
 
-  private def cappedBandsCached(sh: DataFrame): DataFrame =
-    bandFrameCache.getOrElseUpdate((sh.sparkSession, sh), {
-      val classes = sh.groupBy("simhash").agg(count(lit(1)).as("csz"))
-      val sigBands = classes.withColumn("band", explode(sequence(lit(0), lit(3))))
-        .withColumn("key", expr("(simhash >> (band * 14)) & 16383"))
-      // the BucketCap contract counts DOCS per (band, key) — sum of class
-      // sizes, no doc-level explode needed. Whole-partition window, not
-      // groupBy + join-back (r16): the same per-(band, key) sum lands on
-      // every row in ONE exchange instead of two (aggregate + re-join).
-      val wBK = org.apache.spark.sql.expressions.Window.partitionBy("band", "key")
-      graft.Memo.pin(sigBands
-        .withColumn("bsz", sum("csz").over(wBK))
-        .filter(col("bsz") <= BucketCap)
-        .select("simhash", "band", "key"))
-    })
-
-  def simhashPairs(sh: DataFrame, emitBound: Long = 6L): DataFrame = {
+  /** [[simhashPairs]] over the table's precomputed [[cappedBands]]. */
+  def simhashPairsOver(sh: DataFrame, sb: DataFrame, emitBound: Long = 6L): DataFrame = {
     // Class-level band join (r12): docs sharing a signature are ONE row
     // in the self-join. The doc-level join is quadratic in bucket DOC
     // count, and a boilerplate/replica-heavy corpus packs buckets with
@@ -190,7 +187,6 @@ object DedupPack extends QueryPack {
     // output-bound, the right complexity at any dup ratio. Pure
     // refactoring: the emitted pair set is IDENTICAL (measured
     // except()-empty both ways at 10x), so the oracle is untouched.
-    val sb = cappedBandsCached(sh)
     val ca = sb.select(col("simhash").as("simhash1"), col("band"), col("key"))
     val cb = sb.select(col("simhash").as("simhash2"), col("band"), col("key"))
     // DIRECTED class pairs incl. the self pair: an unordered doc pair
@@ -211,15 +207,6 @@ object DedupPack extends QueryPack {
       .select("doc1", "doc2", "simhash1", "simhash2", "hamming").distinct()
       .orderBy("doc1", "doc2")
   }
-
-  /** Session-memoized LSH candidate pairs (band-bucket collisions with
-    * match counts) — referenced twice by the verification join below; a
-    * bare per-call .cache() here lingered for the async ContextCleaner
-    * (the r07 bench-neighborhood debt class) and re-derived the
-    * signatures every call.
-    */
-  private val candCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
 
   /** Bucket cap for the band self-joins (minhash AND simhash): identical
     * signatures form one bucket, and at web scale a boilerplate/empty-doc
@@ -250,16 +237,19 @@ object DedupPack extends QueryPack {
     * feeds the band keys (via candsCached) AND the calibration audit's
     * per-pair match count, which self-joins it; fixed 32 rows per doc.
     */
-  private val sigCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   private def sigsCached(s: SparkSession, d: String): DataFrame =
-    sigCache.getOrElseUpdate((s, d),
-      graft.Memo.pin(minhashFromShingles(TextPack.shinglesCached(s, d))))
+    Memo.frame(("DedupPack.sigs", s, d), Memo.Pin)(
+      minhashFromShingles(TextPack.shinglesCached(s, d)))
 
+  /** Session-memoized LSH candidate pairs (band-bucket collisions with
+    * match counts) — referenced twice by the verification join below; a
+    * bare per-call .cache() here lingered for the async ContextCleaner
+    * (the r07 bench-neighborhood debt class) and re-derived the
+    * signatures every call.
+    */
   private def candsCached(s: SparkSession, d: String): DataFrame =
-    candCache.getOrElseUpdate((s, d),
-      graft.Memo.pin(lshCandidates(bandSignatures(sigsCached(s, d)))))
+    Memo.frame(("DedupPack.cands", s, d), Memo.Pin)(
+      lshCandidates(bandSignatures(sigsCached(s, d))))
 
   /** Session-memoized exact shingle-intersection counts for the LSH
     * candidate pairs (r16): q_dedup_minhash_lsh and q_minhash_calibration
@@ -268,18 +258,14 @@ object DedupPack extends QueryPack {
     * heaviest stage of either query. One fill serves both; rows are
     * bounded by the candidate set, the same contract as candsCached.
     */
-  private val interCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   private def interCached(s: SparkSession, d: String): DataFrame =
-    interCache.getOrElseUpdate((s, d), {
+    Memo.frame(("DedupPack.inter", s, d), Memo.Cache) {
       val shd = TextPack.shinglesCached(s, d)
       candsCached(s, d).select("doc1", "doc2")
         .join(shd.select(col("doc_id").as("doc1"), col("shingle")), "doc1")
         .join(shd.select(col("doc_id").as("doc2"), col("shingle")), Seq("doc2", "shingle"))
         .groupBy("doc1", "doc2").agg(count(lit(1)).as("inter"))
-        .cache()
-    })
+    }
 
   /** Per-doc distinct-shingle counts — the sz1/sz2 join sides both LSH
     * queries attach. Delegates to TextPack's shared session memo (r16):
@@ -309,7 +295,8 @@ object DedupPack extends QueryPack {
         .select("doc1", "doc2", "n_bands_matched", "inter", "sz1", "sz2", "jaccard")
         .orderBy("doc1", "doc2")
     }),
-    "q_dedup_simhash" -> ((s, d) => simhashPairs(simhashCached(s, d))),
+    "q_dedup_simhash" -> ((s, d) =>
+      simhashPairsOver(simhashCached(s, d), simhashBandsCached(s, d))),
     "q_minhash_calibration" -> ((s, d) => {
       // Estimator-vs-truth calibration for the MinHash family: for every
       // LSH candidate pair, count matching permutation minima (the

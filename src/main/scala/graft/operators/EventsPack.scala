@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryPack, Tables}
+import graft.{Memo, QueryPack, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -17,14 +17,11 @@ object EventsPack extends QueryPack {
     * shared by q_dau_wau and q_dau_wau_approx (result is at most
     * |users|×|days| rows, tiny next to the event stream).
     */
-  private val userDaysCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   private def userDaysCached(s: SparkSession, d: String): DataFrame =
-    userDaysCache.getOrElseUpdate((s, d),
+    Memo.frame(("EventsPack.userDays", s, d), Memo.Cache)(
       Tables.events(s, d)
         .select(col("user_id"), expr("ts div 86400000000000").as("day"))
-        .distinct().cache())
+        .distinct())
 
   /** Configured funnel stage list (GraftConfig events.funnel_stages;
     * default signup→view→click→purchase). First stage is ungated; each
@@ -290,11 +287,8 @@ object EventsPack extends QueryPack {
     * values). Days-scale rows. See the q_dau_wau scaladoc for the
     * first-activity-in-window derivation.
     */
-  private val dauWauCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   private def dauWauExact(s: SparkSession, d: String): DataFrame =
-    dauWauCache.getOrElseUpdate((s, d), {
+    Memo.frame(("EventsPack.dauWauExact", s, d), Memo.Pin) {
       val w = Window.partitionBy("user_id").orderBy("day")
       userDaysCached(s, d)
         .withColumn("lo",
@@ -309,8 +303,7 @@ object EventsPack extends QueryPack {
         .filter(col("dau") > 0)
         .select((col("d") * 86400000L).as("day_ms"), col("dau"), col("wau"),
           (col("dau") / col("wau")).as("stickiness"))
-        .localCheckpoint()
-    })
+    }
 
   /** [[dauWauApprox]] over an already-distinct (user_id, day) frame —
     * lets the pack share one memoized distinct pass with q_dau_wau.

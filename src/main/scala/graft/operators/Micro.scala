@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Memo
 import graft.Tables
 import graft.functions.Port
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -140,12 +141,9 @@ object Micro {
     * throughout, so every cum column is bit-identical to the per-query
     * exclCum it replaces.
     */
-  private val cumCache =
-    graft.Memo.map[(SparkSession, String, Long), DataFrame](graft.Memo.release)
-
   def cumTicksCached(s: SparkSession, d: String,
                      chunkNs: Long = ChunkNs): DataFrame =
-    cumCache.getOrElseUpdate((s, d, chunkNs), {
+    Memo.frame(("Micro.cumTicks", s, d, chunkNs), Memo.Pin) {
       val wIn = Window.partitionBy("symbol", "_ck").orderBy("ts", "event_id")
         .rowsBetween(Window.unboundedPreceding, -1)
       val wc = Window.partitionBy("symbol").orderBy("_ck")
@@ -170,19 +168,18 @@ object Micro {
             .as("cum_vol_prev"),
           (coalesce(sum(col("sv")).over(wIn), lit(0L)) + col("_offsv"))
             .as("cum_sv_prev"))
-        // localCheckpoint, not cache: the consumers are single hash
-        // aggregates, and re-analyzing the deep tick lineage (chunk
-        // links + two window layers) per execution cost more driver
-        // time than the aggregates themselves; checkpointing truncates
-        // the logical plan to the materialized blocks. The explicit
-        // symbol repartition matters twice: AQE coalesces the small-SF
-        // shuffle (a bare checkpoint would FREEZE that 1-partition
-        // layout), and a user repartition both survives AQE and is
-        // advertised by the checkpointed scan, so per-symbol consumers
-        // still fuse their aggregates without an exchange.
+        // Pin, not Cache: the consumers are single hash aggregates, and
+        // re-analyzing the deep tick lineage (chunk links + two window
+        // layers) per execution cost more driver time than the
+        // aggregates themselves; the checkpoint truncates the logical
+        // plan to the materialized blocks. The explicit symbol
+        // repartition only spreads the rows: AQE coalesces the small-SF
+        // shuffle, and a bare checkpoint would FREEZE that 1-partition
+        // layout. The checkpointed scan advertises no partitioning, so
+        // per-symbol consumers still plan their own exchange
+        // (MemoReleaseSpec pins this; it is why Memo.Layout caches).
         .repartition(32, col("symbol"))
-        .localCheckpoint()
-    })
+    }
 
   /** Ticks with `dpc` = cent-price diff vs the previous tick of the same
     * symbol (global stream order, null on the symbol's first tick) and
@@ -258,13 +255,10 @@ object Micro {
     * full tick feed). One fill per (session, dir, chunk) serves both;
     * Memo owns eviction like every other session cache.
     */
-  private val signedCache =
-    graft.Memo.map[(SparkSession, String, Long), DataFrame](graft.Memo.release)
-
   def signedTicksCached(s: SparkSession, d: String,
                         chunkNs: Long = ChunkNs): DataFrame =
-    signedCache.getOrElseUpdate((s, d, chunkNs),
-      graft.Memo.pin(signedTicks(s, d, chunkNs)))
+    Memo.frame(("Micro.signedTicks", s, d, chunkNs), Memo.Pin)(
+      signedTicks(s, d, chunkNs))
 
   def tickRuleFlow(s: SparkSession, d: String, chunkNs: Long = ChunkNs): DataFrame =
     signedTicksCached(s, d, chunkNs)
@@ -361,24 +355,20 @@ object Micro {
     * per-query windows they replace. Bar-scale rows — the cache is the
     * bars-level footprint class, not ticks.
     */
-  private val barLagCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   def barCentLagsCached(s: SparkSession, d: String): DataFrame =
-    barLagCache.getOrElseUpdate((s, d), {
+    Memo.frame(("Micro.barCentLags", s, d), Memo.Pin) {
       val w = Window.partitionBy("symbol").orderBy("bucket_ms")
       Bars.ohlcvCached(s, d, 60)
         .select(col("symbol"), col("bucket_ms"),
           floor(col("close") * 100 + lit(0.5)).cast("long").as("cents"))
         .select(col("symbol") +: col("bucket_ms") +: col("cents") +:
           (1 to BarLags).map(k => lag(col("cents"), k).over(w).as(s"c$k")): _*)
-        // localCheckpoint for the same lineage-analysis reason as
-        // cumTicksCached (scan-shallow consumer plans); same explicit
-        // symbol repartition so the checkpointed scan advertises a
-        // partitioning the ACF/VR aggregates can ride exchange-free
+        // pinned for the same lineage-analysis reason as cumTicksCached
+        // (scan-shallow consumer plans), with the same explicit symbol
+        // repartition to spread the rows (the ACF/VR aggregates still
+        // plan their own exchange over the checkpointed scan)
         .repartition(32, col("symbol"))
-        .localCheckpoint()
-    })
+    }
 
   /** Lo-MacKinlay variance ratio VR(q) = Var(q-period diff)/(q·Var(1))
     * per symbol on minute-bar cent diffs, q ∈ {2, 5, 10} — VR < 1 flags

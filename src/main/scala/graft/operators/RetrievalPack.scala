@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryPack, Tables}
+import graft.{Memo, QueryPack, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -61,11 +61,8 @@ object RetrievalPack extends QueryPack {
     *         * ((tf * (K1+1)) / (tf + K1 * (1 - B + B * dl / avgdl)))
     *         * 1e6 + 0.5)
     */
-  private val tfCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   private def tfScoredCached(s: SparkSession, d: String): DataFrame =
-    tfCache.getOrElseUpdate((s, d), {
+    Memo.frame(("RetrievalPack.tfScored", s, d), Memo.Pin) {
       val toks = Tables.documents(s, d)
         .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
       val tf = toks.groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
@@ -74,7 +71,7 @@ object RetrievalPack extends QueryPack {
       val stats = Tables.documents(s, d)
         .agg(count(lit(1)).as("n_docs"),
           sum(size(split(col("text"), " ")).cast("long")).as("total_toks"))
-      val r = tf.join(broadcast(dfreq), "tok")
+      tf.join(broadcast(dfreq), "tok")
         .crossJoin(broadcast(stats))
         .withColumn("avgdl", col("total_toks").cast("double") / col("n_docs"))
         .withColumn("u",
@@ -84,13 +81,24 @@ object RetrievalPack extends QueryPack {
                 (col("tf") + lit(K1) * (lit(1.0 - B) + lit(B) * col("dl") / col("avgdl")))) *
               lit(1e6) + 0.5).cast("long"))
         .select("doc_id", "tok", "tf", "dl", "df", "u")
-        .transform(graft.Memo.pin)
-      // materialize NOW (the overlapAgg/candScores Memo pattern): without
-      // this the full scoring build lands inside whichever consumer query
-      // runs first and skews its timing (r10 ADVICE)
-      r.count()
-      r
-    })
+    }
+
+  /** Session-memoized symmetrized top-3 kNN edge frame
+    * (vec_id, nbr, cosine, rank) over the shared LSH pool — ONE
+    * two-level rank serves q_knn_graph, q_knn_purity AND the PageRank
+    * edge build (r12: the 30x rehearsal measured each consumer paying
+    * the full 12-15 s rank per WARM call because only the pool, not
+    * the ranked graph, was memoized). Two-level because a hot vector's
+    * partner list is bounded by bands x bucket cap (~48k worst case)
+    * and must not sort in one task; same top-3 set as a global rank.
+    */
+  private def knnEdgesCached(s: SparkSession, d: String): DataFrame =
+    Memo.frame(("RetrievalPack.knnEdges", s, d), Memo.Pin) {
+      val e = AnnPack.candScoresCached(s, d)
+      val dirs = e.select(col("v1").as("vec_id"), col("v2").as("nbr"), col("cosine"))
+        .unionByName(e.select(col("v2").as("vec_id"), col("v1").as("nbr"), col("cosine")))
+      twoLevelRank(dirs, Seq("vec_id"), k = 3, score = "cosine", id = "nbr")
+    }
 
   /** Session-memoized PageRank table over the kNN top-3 graph — the
     * q_graph_rank result frame (vec_id, r_u).
@@ -121,34 +129,8 @@ object RetrievalPack extends QueryPack {
     * iteration counts). Recompute lineage stays live (plain caches), so
     * an evicted partition recomputes instead of failing.
     */
-  private val rankCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
-  /** Session-memoized symmetrized top-3 kNN edge frame
-    * (vec_id, nbr, cosine, rank) over the shared LSH pool — ONE
-    * two-level rank serves q_knn_graph, q_knn_purity AND the PageRank
-    * edge build (r12: the 30x rehearsal measured each consumer paying
-    * the full 12-15 s rank per WARM call because only the pool, not
-    * the ranked graph, was memoized). Two-level because a hot vector's
-    * partner list is bounded by bands x bucket cap (~48k worst case)
-    * and must not sort in one task; same top-3 set as a global rank.
-    */
-  private val knnEdgeCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
-  private def knnEdgesCached(s: SparkSession, d: String): DataFrame =
-    knnEdgeCache.getOrElseUpdate((s, d), {
-      val e = AnnPack.candScoresCached(s, d)
-      val dirs = e.select(col("v1").as("vec_id"), col("v2").as("nbr"), col("cosine"))
-        .unionByName(e.select(col("v2").as("vec_id"), col("v1").as("nbr"), col("cosine")))
-      val r = twoLevelRank(dirs, Seq("vec_id"), k = 3, score = "cosine", id = "nbr")
-        .transform(graft.Memo.pin)
-      r.count()
-      r
-    })
-
   private def graphRankCached(s: SparkSession, d: String): DataFrame =
-    rankCache.getOrElseUpdate((s, d), {
+    Memo.staged(("RetrievalPack.graphRank", s, d), Memo.Cache) {
       val dirs = knnEdgesCached(s, d)
         .select(col("vec_id").as("src"), col("nbr").as("dst"))
       val emb = AnnPack.embCached(s, d)
@@ -160,7 +142,7 @@ object RetrievalPack extends QueryPack {
       val teleport = 150000000000L / n
       var ranks = nodes.withColumn("r_u", lit(1000000000000L / n))
       var prev: Option[DataFrame] = None
-      for (_ <- 1 to 3) {
+      for (it <- 1 to 3) {
         val contrib = edges.join(ranks.withColumnRenamed("vec_id", "src"), "src")
           .select(col("dst").as("vec_id"),
             expr("r_u div outdeg").as("c"))
@@ -169,17 +151,17 @@ object RetrievalPack extends QueryPack {
           .select(col("vec_id"),
             (lit(teleport) +
               expr("85 * coalesce(in_mass, cast(0 as bigint)) div 100")).as("r_u"))
-          .cache()
-        next.count()
-        prev.foreach(_.unpersist(blocking = false))
-        prev = Some(next)
+        if (it < 3) {
+          next.cache().count()
+          prev.foreach(_.unpersist(blocking = false))
+          prev = Some(next)
+        }
         ranks = next
       }
-      // the final iteration stays cached (Memo eviction unpersists it);
-      // the edge cache is scaffolding — free it now, recompute is live
-      edges.unpersist(blocking = false)
-      ranks
-    })
+      // the final iteration is the memo entry; the edge list and the last
+      // cached iteration are its interior frames
+      (ranks, edges +: prev.toSeq)
+    }
 
   /** Deterministic random-negative partner per anchor: for each anchor
     * id q (vec_id < 10), partner(q) = argmin over OBSERVED vec_ids v ≠ q
@@ -228,11 +210,8 @@ object RetrievalPack extends QueryPack {
     * aggregate behind it is a full pass over the cached tf table —
     * filled once per session; the frame is ≤ 10·10 rows.
     */
-  private val lexTopCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   private def lexTopCached(s: SparkSession, d: String): DataFrame =
-    lexTopCache.getOrElseUpdate((s, d), {
+    Memo.frame(("RetrievalPack.lexTop", s, d), Memo.Pin) {
       val tf = tfScoredCached(s, d)
       val qtok = tf.filter(col("doc_id") < 10)
         .select(col("doc_id").as("q_id"), col("tok")).distinct()
@@ -243,8 +222,7 @@ object RetrievalPack extends QueryPack {
       twoLevelRank(lexScored, Seq("q_id"), k = 10,
         score = "score_u", id = "doc_id")
         .select(col("q_id"), col("doc_id"), col("rank").as("lex_rank"))
-        .transform(graft.Memo.pin)
-    })
+    }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_bm25_topk" -> ((s, d) => {

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryPack, Tables}
+import graft.{Memo, QueryPack, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -62,14 +62,11 @@ object SpanPack extends QueryPack {
     * q_dup_stats both consume it, so a session running both (Verify,
     * Bench) builds the coverage join and merge windows once.
     */
-  private val spanCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   def spansCached(s: SparkSession, d: String): DataFrame =
-    spanCache.getOrElseUpdate((s, d),
+    Memo.frame(("SpanPack.spans", s, d), Memo.Cache)(
       dupSpansFrom(TextPack.posShinglesCached(s, d)
         .filter(col("shingle").isNotNull)
-        .select("doc_id", "pos", "shingle")).cache())
+        .select("doc_id", "pos", "shingle")))
 
   /** Kernel over an explicit (doc_id, pos, shingle) stream. */
   def dupSpansFrom(pos3: DataFrame): DataFrame = {
@@ -154,12 +151,9 @@ object SpanPack extends QueryPack {
     * and re-scans `text` (verified in the plan audit). Caching the
     * narrow frame makes the heavy column a single-read at any scale.
     */
-  private val packDocsCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   def packDocsCached(s: SparkSession, d: String): DataFrame =
-    packDocsCache.getOrElseUpdate((s, d),
-      narrowDocs(Tables.documents(s, d)).cache())
+    Memo.frame(("SpanPack.packDocs", s, d), Memo.Cache)(
+      narrowDocs(Tables.documents(s, d)))
 
   private def packLayout(docsNarrow: DataFrame, prefixLen: Int): DataFrame = {
     val C = ContextLen

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryPack, Tables}
+import graft.{Memo, QueryPack, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -57,11 +57,8 @@ object TextPack extends QueryPack {
     * `shingle IS NOT NULL` (position-sensitive ones — winnowing — MUST,
     * or their window frames would count the extra row).
     */
-  private val posShingleCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   def posShinglesCached(s: SparkSession, d: String): DataFrame =
-    posShingleCache.getOrElseUpdate((s, d), {
+    Memo.frame(("TextPack.posShingles", s, d), Memo.Cache) {
       val w = Window.partitionBy("doc_id").orderBy("pos")
       graft.Tables.documents(s, d)
         .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "tok")))
@@ -73,19 +70,15 @@ object TextPack extends QueryPack {
         .select(col("doc_id"), col("pos"), col("tok"), col("t1"),
           when(col("t2").isNotNull,
             concat_ws(" ", col("tok"), col("t1"), col("t2"))).as("shingle"))
-        .cache()
-    })
+    }
 
   /** Session-memoized cached shingle table — feeds the jaccard pipeline
     * and DedupPack's MinHash signatures/verification.
     */
-  private val shingleCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   def shinglesCached(s: SparkSession, d: String): DataFrame =
-    shingleCache.getOrElseUpdate((s, d),
-      graft.Memo.pin(posShinglesCached(s, d).filter(col("shingle").isNotNull)
-        .select("doc_id", "shingle").distinct()))
+    Memo.frame(("TextPack.shingles", s, d), Memo.Pin)(
+      posShinglesCached(s, d).filter(col("shingle").isNotNull)
+        .select("doc_id", "shingle").distinct())
 
   /** Session-memoized per-doc distinct-3-gram counts (r16) — the
     * denominator frame of q_ngram_novelty and the sz1/sz2 sides of
@@ -93,13 +86,10 @@ object TextPack extends QueryPack {
     * cached shingle table per call (~6 s taskTime each warm at sf0.1);
     * one dimension-scale fill (one row per doc) serves them all.
     */
-  private val docShingleSizeCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   def docShingleSizesCached(s: SparkSession, d: String): DataFrame =
-    docShingleSizeCache.getOrElseUpdate((s, d),
-      graft.Memo.pin(shinglesCached(s, d).groupBy("doc_id")
-        .agg(count(lit(1)).as("n_shingles"))))
+    Memo.frame(("TextPack.docShingleSizes", s, d), Memo.Pin)(
+      shinglesCached(s, d).groupBy("doc_id")
+        .agg(count(lit(1)).as("n_shingles")))
 
   /** Session-memoized first-occurrence novelty counts (r16): for each
     * doc, how many of the corpus's distinct 3-grams first appear (lowest
@@ -108,14 +98,11 @@ object TextPack extends QueryPack {
     * that query: ~7 s taskTime warm at sf0.1) runs once per session; the
     * frame is dimension-scale (≤ one row per doc).
     */
-  private val novelCountCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   private def novelCountsCached(s: SparkSession, d: String): DataFrame =
-    novelCountCache.getOrElseUpdate((s, d),
-      graft.Memo.pin(shinglesCached(s, d).groupBy("shingle").agg(min(col("doc_id")).as("first_doc"))
+    Memo.frame(("TextPack.novelCounts", s, d), Memo.Pin)(
+      shinglesCached(s, d).groupBy("shingle").agg(min(col("doc_id")).as("first_doc"))
         .groupBy(col("first_doc").as("doc_id"))
-        .agg(count(lit(1)).as("n_novel"))))
+        .agg(count(lit(1)).as("n_novel")))
 
   /** Session-memoized per-(doc, token) term-frequency frame — the
     * bag-of-words table (doc_id, tok, tf) behind TF-IDF: document
@@ -126,19 +113,15 @@ object TextPack extends QueryPack {
     * the positional stream drops each doc's last token (t1 null) and
     * single-token docs entirely, so tf must not derive from it.
     */
-  private val tokenCountCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   def tokenCountsCached(s: SparkSession, d: String): DataFrame =
-    tokenCountCache.getOrElseUpdate((s, d),
+    Memo.frame(("TextPack.tokenCounts", s, d), Memo.Pin)(
       graft.Tables.documents(s, d)
         .select(col("doc_id"), col("source"),
           explode(split(col("text"), " ")).as("tok"))
         .groupBy("doc_id", "source", "tok").agg(count(lit(1)).as("tf"))
-        // repartition + localCheckpoint (the Micro.cumTicksCached
-        // pattern): shallow consumer plans, no frozen 1-partition layout
-        .repartition(32, col("doc_id"))
-        .localCheckpoint())
+        // explicit repartition before the pin (the Micro.cumTicksCached
+        // pattern): AQE's small-SF coalesce is not frozen into the memo
+        .repartition(32, col("doc_id")))
 
   /** Session-memoized IDF model table — (tok, df, n_docs): document
     * frequency over the bag-of-words memo plus the corpus size, the
@@ -146,11 +129,8 @@ object TextPack extends QueryPack {
     * reuse rationale as [[bigramLmCached]]: the table fills once per
     * session; scoring is then one broadcast join against the tf memo.
     */
-  private val idfCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   def idfCached(s: SparkSession, d: String): DataFrame =
-    idfCache.getOrElseUpdate((s, d), {
+    Memo.frame(("TextPack.idf", s, d), Memo.Pin) {
       val nDocs = graft.Tables.documents(s, d).agg(count(lit(1)).as("n_docs"))
       tokenCountsCached(s, d)
         // df = DISTINCT DOCS containing the token. The memo rows are
@@ -160,8 +140,7 @@ object TextPack extends QueryPack {
         // too (two-phase partial-distinct aggregate, still vocab-scale)
         .groupBy("tok").agg(countDistinct(col("doc_id")).as("df"))
         .crossJoin(broadcast(nDocs))
-        .localCheckpoint()
-    })
+    }
 
   /** Session-memoized frozen-tokenizer piece table — (tok, pieces) from
     * the staged merge passes over the corpus vocabulary. The tokenizer
@@ -169,15 +148,11 @@ object TextPack extends QueryPack {
     * over the vocab are a model artifact like [[idfCached]]: fill once,
     * broadcast to every encode.
     */
-  private val bpePiecesCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   def bpePiecesCached(s: SparkSession, d: String): DataFrame =
-    bpePiecesCache.getOrElseUpdate((s, d),
+    Memo.frame(("TextPack.bpePieces", s, d), Memo.Pin)(
       Bpe.piecesTable(
         tokenCountsCached(s, d).filter(length(col("tok")) >= 1)
-          .select("tok").distinct())
-        .localCheckpoint())
+          .select("tok").distinct()))
 
   /** Session-memoized corpus bigram LM counts — (tok, t1, c12, c1) with
     * c12 the bigram count and c1 the left-context total (a vocab-scale
@@ -186,18 +161,14 @@ object TextPack extends QueryPack {
     * session; scoring is then one broadcast join against the memoized
     * positional stream.
     */
-  private val bigramLmCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   def bigramLmCached(s: SparkSession, d: String): DataFrame =
-    bigramLmCache.getOrElseUpdate((s, d),
+    Memo.frame(("TextPack.bigramLm", s, d), Memo.Pin)(
       posShinglesCached(s, d)
         .groupBy("tok", "t1").agg(count(lit(1)).as("c12"))
         .withColumn("c1", sum(col("c12")).over(Window.partitionBy("tok")))
-        // repartition + localCheckpoint (the Micro.cumTicksCached
-        // pattern): shallow consumer plans, no frozen 1-partition layout
-        .repartition(32, col("tok"))
-        .localCheckpoint())
+        // explicit repartition before the pin (the Micro.cumTicksCached
+        // pattern): AQE's small-SF coalesce is not frozen into the memo
+        .repartition(32, col("tok")))
 
   /** Jaccard pair chain over the shingle CTE (final CTE: jp) — shared by
     * the pair and cluster oracles.
@@ -883,13 +854,9 @@ object TextPack extends QueryPack {
     * loop's cost land nondeterministically on later bench queries
     * (q_dedup_clusters itself measured 2.19–8.11 s across driver runs).
     */
-  private val clusterCache =
-    graft.Memo.map[(SparkSession, String), (DataFrame, () => Unit)] {
-      case (df, release) => graft.Memo.release(df); release()
-    }
-
   private def clustersCached(s: SparkSession, d: String): DataFrame =
-    clusterCache.getOrElseUpdate((s, d), {
+    Memo.value[(DataFrame, () => Unit)](("TextPack.clusters", s, d),
+      { case (df, release) => Memo.release(df); release() }) {
       // near-dup canonicalization: connected components over the dup
       // pairs — see graft.operators.ConnectedComponents for the
       // propagation algorithm, its O(log diameter) convergence, and the
@@ -914,7 +881,7 @@ object TextPack extends QueryPack {
       result.count()
       labels.unpersist(blocking = false)
       (result, release)
-    })._1
+    }._1
 
   /** Session-memoized PREFIX-FILTERED verified near-dup pairs — the
     * shared candidate+verify table behind q_dedup_ngram_jaccard,
@@ -942,15 +909,12 @@ object TextPack extends QueryPack {
     * stopword-shingle cap stays as a second, now non-load-bearing,
     * linearity guard.
     */
-  private val verifiedPairsCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   /** (doc1, doc2, inter, sz1, sz2) for every pair whose
     * containment-over-min can reach 1/2 — threshold filters are applied
     * by the consumers.
     */
   private def verifiedPairs(s: SparkSession, d: String): DataFrame =
-    verifiedPairsCache.getOrElseUpdate((s, d), {
+    Memo.frame(("TextPack.verifiedPairs", s, d), Memo.Cache) {
       val shd = shinglesCached(s, d)
       // stopword-shingle cut: postings capped (no-op at this corpus,
       // linearity guard at scale)
@@ -1010,8 +974,7 @@ object TextPack extends QueryPack {
         .select(col("doc1"), col("doc2"),
           size(array_intersect(col("s1"), col("s2"))).cast("long").as("inter"),
           col("sz1"), col("sz2"))
-        .cache()
-    })
+    }
 
   private def jaccardPairs(s: SparkSession, d: String): DataFrame =
     verifiedPairs(s, d)

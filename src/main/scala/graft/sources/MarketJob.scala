@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.{QueryPack, Tables}
+import graft.{Memo, QueryPack, Tables}
 import graft.backtest.{Backtester, BtSql, Metrics, Signals}
 import graft.etl.Cleaner
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -39,33 +39,26 @@ object MarketJob extends QueryPack {
     * (funnel count + bar build), so uncached the validate→IQR chain —
     * quantile aggregate included — planned twice per call and once more
     * per warm pass.
-    */
-  private val cleanTickCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
-  /** Cleaned tick feed: validate -> per-symbol IQR gate (keeps
+    *
+    * Cleaned tick feed: validate -> per-symbol IQR gate (keeps
     * ts/price/volume so the bar stage can resample it).
     */
   def cleanTicks(s: SparkSession, d: String): DataFrame =
-    cleanTickCache.getOrElseUpdate((s, d), {
+    Memo.frame(("MarketJob.cleanTicks", s, d), Memo.Cache) {
       val valid = Tables.ticks(s, d)
         .select("symbol", "ts", "event_id", "price", "volume")
         .filter(col("price") >= MinPrice && col("price") <= MaxPrice)
       valid.join(broadcast(Cleaner.iqrBounds(valid)), "symbol")
         .filter(col("price") >= col("lo") && col("price") <= col("hi"))
         .select("symbol", "ts", "event_id", "price", "volume")
-        .cache()
-    })
+    }
 
   /** Session memo for the cleaned 1-minute bars — the resample stage's
     * output, read by the funnel count AND the whole backtest chain.
     */
-  private val cleanBarCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   def cleanBars(s: SparkSession, d: String): DataFrame =
-    cleanBarCache.getOrElseUpdate((s, d),
-      graft.Memo.pin(graft.operators.Bars.ohlcv(cleanTicks(s, d), 60)))
+    Memo.frame(("MarketJob.cleanBars", s, d), Memo.Pin)(
+      graft.operators.Bars.ohlcv(cleanTicks(s, d), 60))
 
   /** Session memo for the backtest equity frame over the CLEANED bars
     * (r16) — the signal + vectorized-backtest stage of the composed job.
@@ -77,12 +70,9 @@ object MarketJob extends QueryPack {
     * window parallelism is bounded by the symbol count); now the
     * metrics aggregate reads the cached frame directly.
     */
-  private val btCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   private def btCleanCached(s: SparkSession, d: String): DataFrame =
-    btCache.getOrElseUpdate((s, d),
-      graft.Memo.pin(Backtester.run(Signals.maCrossPlain(cleanBars(s, d)))))
+    Memo.frame(("MarketJob.btClean", s, d), Memo.Pin)(
+      Backtester.run(Signals.maCrossPlain(cleanBars(s, d))))
 
   /** The composed per-symbol summary manifest. */
   def summary(s: SparkSession, d: String): DataFrame = {
